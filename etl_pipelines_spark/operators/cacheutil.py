@@ -4,8 +4,8 @@ long-lived session running the whole registry accumulates storage
 memory until LRU eviction).
 
 Operators that cache a bounded intermediate register it here instead
-of calling ``.cache()`` directly; harness loops (bench.py per-query,
-the warehouse pipeline per-run, driver sweeps) call
+of calling ``.cache()`` directly; harness loops (the benchmark per
+op, the warehouse pipeline per run, registry sweeps) call
 ``unpersist_tracked()`` at their natural boundary. Between
 boundaries the cache behaves exactly as before — the registry holds
 plain references, and unpersisting an already-evicted or reused

@@ -134,6 +134,14 @@ def attach_global_rank(
     — the same expressions drive both the range partitioner and the
     within-partition window, which is what makes the composition a
     total order.
+
+    Caching: each call ``tracked_cache``s two frames (the input and the
+    ranked range partitions) and never releases them itself, because
+    the returned frame still reads them. The caller releases them with
+    ``operators.cacheutil.unpersist_tracked()`` at its own boundary
+    (after the result is written or collected), as the pipeline does
+    per run and the benchmark per op; a long-lived session that never
+    does holds them until LRU eviction.
     """
     # cache the caller's frame BEFORE range partitioning: the range
     # sampling pass otherwise re-executes the whole upstream rollup a

@@ -92,7 +92,7 @@ class Model:
 @dataclass
 class ModelResult:
     name: str
-    status: str  # "success" | "failed" | "skipped"
+    status: str  # "success" | "failed"
     seconds: float
     attempts: int
     error: str | None = None
@@ -100,9 +100,12 @@ class ModelResult:
 
 @dataclass
 class TaskGroup:
-    """Ordered set of models, mirroring one pipeline_config.json
-    entry (a Datawarehouse-ETL directory). Models inside a group run
-    in listed order (the reference's 00_/01_ file-name prefixes).
+    """Set of models, mirroring one pipeline_config.json entry (a
+    Datawarehouse-ETL directory). Models inside a group are submitted
+    in listed order (the reference's 00_/01_ file-name prefixes), but
+    they run one after another only on a one-worker pipeline; a
+    parallel pipeline runs them side by side, so models in one group
+    must not read each other — put a reader in a downstream group.
 
     ``after`` declares which groups this one depends on — the
     pipeline_config.json dependency edges that Airflow uses to run

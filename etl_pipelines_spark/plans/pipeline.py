@@ -1,16 +1,17 @@
 """Pipeline runner — the engine's answer to the reference's Airflow
 fullload DAG (bi-airflow-prod/dags/pipeline/fullload/
-dag_fullload_pipeline.py:43-80): an ordered list of task groups,
-each an ordered list of models, executed with per-model retries and
-the ``trigger_rule='all_done'`` semantics (later groups still run
-after a failure; dag_fullload_pipeline.py:75-76).
+dag_fullload_pipeline.py:43-80): task groups with dependency edges
+(``TaskGroup.after``), each a list of models, executed with per-model
+retries and the ``trigger_rule='all_done'`` semantics (a failed model
+does not stop its dependents; dag_fullload_pipeline.py:75-76).
 
-Scale note: group order encodes the layer topology (ods → master →
-dwh → reporting). Models *within* a layer that don't read each
-other are independent — ``parallel_within_group=True`` runs them on
-a thread pool; Spark's scheduler interleaves their jobs across the
-cluster (FAIR-friendly), which is how a 66-group nightly build keeps
-1000 executors busy instead of running one shuffle at a time.
+One scheduler runs every pipeline: a group's models go to a shared
+worker pool the moment all of its upstream groups have finished, so
+independent subtrees overlap and Spark's FAIR scheduler interleaves
+their jobs across the cluster. ``parallel_within_group`` only sets the
+pool width: one worker runs the models one at a time, in the order
+their groups become ready (listed order among groups ready together),
+six run them side by side.
 """
 
 from __future__ import annotations
@@ -18,10 +19,17 @@ from __future__ import annotations
 import datetime as dt
 import time
 import traceback
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from .model import Model, ModelResult, RunContext, TaskGroup
+
+# Pool width of a parallel run. Not wider: back-to-back rebuilds on a
+# throttling host drift by up to 40% at any width, so local A/Bs cannot
+# separate 6, 8 and 10, and the one 32-core measurement that could read
+# 20.2 s at 10 against 12.0 s at 6. A wider pool raises exactly the
+# sustained demand such a host punishes.
+_PARALLEL_WIDTH = 6
 
 
 @dataclass
@@ -29,39 +37,12 @@ class Pipeline:
     name: str
     groups: list[TaskGroup] = field(default_factory=list)
     retries: int = 1
-    continue_on_failure: bool = True  # trigger_rule='all_done'
     parallel_within_group: bool = False
-    max_parallel: int = 4
-
-    def levels(self) -> "list[list[TaskGroup]]":
-        """Topological levels of the group DAG (TaskGroup.after edges)
-        — groups in one level have no path between them and may run
-        concurrently, the way Airflow schedules independent task
-        groups of the fullload DAG side by side. A group with
-        ``after=None`` depends on every group listed before it (flat
-        chain), so legacy pipelines degenerate to one group per
-        level."""
-        level_of: dict[str, int] = {}
-        out: list[list[TaskGroup]] = []
-        for i, g in enumerate(self.groups):
-            deps = (
-                [x.name for x in self.groups[:i]]
-                if g.after is None
-                else g.after
-            )
-            unknown = [d for d in deps if d not in level_of]
-            if unknown:
-                raise ValueError(
-                    f"group {g.name}: unknown/later dependency {unknown}"
-                )
-            lvl = 1 + max((level_of[d] for d in deps), default=-1)
-            level_of[g.name] = lvl
-            while len(out) <= lvl:
-                out.append([])
-            out[lvl].append(g)
-        return out
 
     def _deps(self) -> "dict[str, set[str]]":
+        """Upstream group names per group. A group with ``after=None``
+        depends on every group listed before it (the flat chain); an
+        explicit ``after`` may name only groups listed earlier."""
         deps: dict[str, set[str]] = {}
         seen: set[str] = set()
         for i, g in enumerate(self.groups):
@@ -97,37 +78,12 @@ class Pipeline:
             prior_floor = None
         ctx.spark.conf.set(_FLOOR_KEY, "1m")
         try:
-            return self._run_all(ctx)
+            results = self._run_dag(ctx)
         finally:
             if prior_floor is not None:
                 ctx.spark.conf.set(_FLOOR_KEY, prior_floor)
             else:
                 ctx.spark.conf.unset(_FLOOR_KEY)
-
-    def _run_all(self, ctx: RunContext) -> list[ModelResult]:
-        if self.parallel_within_group:
-            results = self._run_dag(ctx)
-        else:
-            # Sequential mode: flat topological order (levels in
-            # order, groups and models in listed order) — the
-            # deterministic debugging path.
-            results = []
-            stop = False
-            for level in self.levels():
-                if stop:
-                    results.extend(
-                        ModelResult(m.name, "skipped", 0.0, 0)
-                        for g in level
-                        for m in g.models
-                    )
-                    continue
-                for g in level:
-                    for m in g.models:
-                        results.append(self._run_model(m, ctx))
-                if not self.continue_on_failure and any(
-                    r.status == "failed" for r in results
-                ):
-                    stop = True
         # Models cache()/localCheckpoint() intermediates (the
         # reference's TEMP TABLE idiom); their tables are parquet
         # now, so the blocks are dead weight — leave the session
@@ -150,18 +106,17 @@ class Pipeline:
         it depends on has finished — independent subtrees overlap
         instead of waiting at a global level barrier (the fullload
         DAG's trigger_rule/dependency semantics,
-        dag_fullload_pipeline.py:43-80)."""
-        from concurrent.futures import FIRST_COMPLETED, wait
-
+        dag_fullload_pipeline.py:43-80). Results come back in
+        completion order."""
         deps = self._deps()
         results: list[ModelResult] = []
         done_groups: set[str] = set()
         remaining = {g.name: len(g.models) for g in self.groups}
         pending = list(self.groups)
-        failed = False
         future_group: dict = {}
+        width = _PARALLEL_WIDTH if self.parallel_within_group else 1
 
-        with ThreadPoolExecutor(max_workers=self.max_parallel) as ex:
+        with ThreadPoolExecutor(max_workers=width) as ex:
 
             def submit_ready() -> None:
                 nonlocal pending
@@ -188,26 +143,14 @@ class Pipeline:
                 done, _ = wait(
                     set(future_group), return_when=FIRST_COMPLETED
                 )
-                for fut in done:
+                # submission order, so a one-worker run is reproducible
+                for fut in [f for f in future_group if f in done]:
                     gname = future_group.pop(fut)
-                    r = fut.result()
-                    results.append(r)
-                    if r.status == "failed":
-                        failed = True
+                    results.append(fut.result())
                     remaining[gname] -= 1
                     if remaining[gname] == 0:
                         done_groups.add(gname)
-                if not (failed and not self.continue_on_failure):
-                    submit_ready()
-
-        if failed and not self.continue_on_failure:
-            done_names = {r.name for r in results}
-            results.extend(
-                ModelResult(m.name, "skipped", 0.0, 0)
-                for g in self.groups
-                for m in g.models
-                if m.name not in done_names
-            )
+                submit_ready()
         return results
 
     def _run_model(self, model: Model, ctx: RunContext) -> ModelResult:

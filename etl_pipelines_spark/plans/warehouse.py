@@ -15,8 +15,6 @@ a daily snapshot partition overwrite (W4).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -677,22 +675,4 @@ def build_warehouse_pipeline(**kwargs) -> Pipeline:
     independent subtrees concurrently the way Airflow does —
     3 topological levels: ods → {segment, master, finance, gc,
     reporting marts} → {historical, marketing, monitors}."""
-    # 6 concurrent models — REVERTED from r12's 10 (VERDICT r12 #1).
-    # The r12 builder's paired A/B preferred 10 (par=6 10.9-11.8 s vs
-    # par=10 9.6-10.3 warm, same ordering at local[8]), but the
-    # measurement of record regressed hard with the wider pool
-    # (driver: 12.0 s r11@pool6 → 20.2 s r12@pool10 at 32 cores,
-    # 19.6 s at 8 cores), and the r13 re-measure found local grids
-    # cannot discriminate pool sizes at all: the host throttles under
-    # SUSTAINED parallel demand, so back-to-back rebuild runs drift
-    # +40% regardless of pool (6: 15.3/15.3, 10: 13.5/18.6,
-    # 8: 11.1/17.8 — within-pool spread exceeds the between-pool
-    # effect). A wider pool raises sustained demand, which is exactly
-    # what a throttling host punishes — the one mechanism consistent
-    # with quiet-box A/Bs preferring 10 while the driver box reads
-    # 20 s. Pool 6 is the last driver-proven value; the env knob
-    # stays for cluster tuning (Airflow-parallelism analogue).
-    kwargs.setdefault(
-        "max_parallel", int(os.environ.get("SPARK_GRAFT_DAG_POOL", "6"))
-    )
     return Pipeline(name="fullload", groups=_promoted_groups(), **kwargs)

@@ -135,7 +135,13 @@ def range_feed(df: DataFrame, *keys: str) -> DataFrame:
     scale. The partition count is explicit (REPARTITION_BY_NUM) so AQE
     cannot coalesce the tiny spec exchange to one task and serialize
     the decode — the r12 negative result with the implicit form.
-    Scale-adaptive: defaultParallelism is the cluster's core count."""
+    Scale-adaptive: defaultParallelism is the cluster's core count.
+
+    Ordering contract: a query built this way holds its total order
+    only as the concatenation of its partitions in partition-id
+    order, which ``collect()`` and ``toPandas()`` preserve. Anything
+    that repartitions the result or writes it through a file sink
+    loses the order; such a consumer must ``orderBy`` again."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartitionByRange(n, *keys)
 

@@ -50,10 +50,9 @@ _DEFAULT_CONF: dict[str, str] = {
     # (default) the coalesce target is max(bytes/parallelism,
     # minPartitionSize), so at production shuffle sizes the floor
     # never binds — it only restores parallelism where shuffles are
-    # sub-MiB, i.e. test scale.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_FLOOR", "64k"
-    ),
+    # sub-MiB, i.e. test scale. A pipeline run pins 1 MiB instead
+    # (plans/pipeline.py Pipeline.run): there many models fill the cores.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),

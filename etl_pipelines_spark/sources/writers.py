@@ -85,6 +85,21 @@ def _atomic_swap(tmp_dir: str, final_dir: str) -> None:
         shutil.rmtree(old, ignore_errors=True)
 
 
+def _rewrite(
+    df: DataFrame, path: str, partition_by: list[str] | None = None
+) -> None:
+    """Replace the table at ``path`` with ``df``: write a staging dir
+    beside it, then swap it in. ``df`` may lazily read ``path`` itself
+    (merges, compaction), which is why the write never lands there
+    directly."""
+    tmp = path + "." + uuid.uuid4().hex[:8] + ".tmp"
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(tmp)
+    _atomic_swap(tmp, path)
+
+
 def _cluster_partitions(df: DataFrame, partition_by: list[str]) -> DataFrame:
     """REBALANCE the frame by its partition columns before a
     ``partitionBy`` write (guide §6: coalesce on write). Without it
@@ -120,16 +135,11 @@ def full_refresh(
     task so parquet row-group min/max stats make range predicates on
     those columns skip row groups at scan time — the Spark-native
     form of Redshift's zone maps."""
-    tmp = path + "." + uuid.uuid4().hex[:8] + ".tmp"
     if partition_by:
         df = _cluster_partitions(df, partition_by)
     if sort_within_by:
         df = df.sortWithinPartitions(*sort_within_by)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    _atomic_swap(tmp, path)
+    _rewrite(df, path, partition_by)
 
 
 def append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -270,12 +280,7 @@ def upsert(
                 parent = os.path.dirname(parent)
     else:
         kept = existing.join(new_rows.select(*keys).distinct(), keys, "left_anti")
-        out = kept.unionByName(new_rows)
-        # Write to a staging dir first: 'out' lazily reads the dir
-        # being replaced, so the write must land elsewhere, then swap.
-        tmp = path + "." + uuid.uuid4().hex[:8] + ".tmp"
-        out.write.mode("overwrite").parquet(tmp)
-        _atomic_swap(tmp, path)
+        _rewrite(kept.unionByName(new_rows), path)
 
 
 def schema_evolving_append(existing: DataFrame, incoming: DataFrame) -> DataFrame:
@@ -291,10 +296,7 @@ def backup_table(spark: SparkSession, path: str, backup_path: str) -> None:
     5_master_historical/on_failure/subscription_historical_on_failure
     .sql:1-5). A read-then-write copy via the atomic swap, so a
     half-written backup can never be mistaken for a complete one."""
-    df = spark.read.parquet(path)
-    tmp = backup_path + "." + uuid.uuid4().hex[:8] + ".tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    _atomic_swap(tmp, backup_path)
+    _rewrite(spark.read.parquet(path), backup_path)
 
 
 def restore_missing_snapshots(
@@ -324,10 +326,7 @@ def restore_missing_snapshots(
     to_restore = back.join(F.broadcast(missing), snapshot_col, "left_semi")
     n = to_restore.count()
     if n:
-        merged = schema_evolving_append(hist, to_restore)
-        tmp = history_path + "." + uuid.uuid4().hex[:8] + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        _atomic_swap(tmp, history_path)
+        _rewrite(schema_evolving_append(hist, to_restore), history_path)
     return n
 
 
@@ -358,9 +357,7 @@ def compact(
     df = spark.read.parquet(path)
     if target_files is None:
         target_files = max(1, -(-_dir_bytes(path) // target_bytes))
-    tmp = path + "." + uuid.uuid4().hex[:8] + ".tmp"
-    df.repartition(target_files).write.mode("overwrite").parquet(tmp)
-    _atomic_swap(tmp, path)
+    _rewrite(df.repartition(target_files), path)
     return target_files
 
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -65,6 +66,27 @@ def read_events_stream(
     return reader.format(fmt).load(landing_dir)
 
 
+def _drain(
+    writer: DataStreamWriter, checkpoint_dir: str, timeout_sec: int
+) -> None:
+    """Start ``writer`` as an ``availableNow`` query on ``checkpoint_dir``
+    and wait for it to drain everything landed so far. A query still
+    running after ``timeout_sec`` is stopped and the drain raises
+    ``TimeoutError``: returning would leave it writing into the target
+    behind the caller's back."""
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"streaming drain on {checkpoint_dir} still running after "
+            f"{timeout_sec} s; stopped"
+        )
+
+
 def deduped(stream: DataFrame, watermark: str = "1 day") -> DataFrame:
     """St2: at-least-once landing -> exactly-once-ish output.
 
@@ -100,13 +122,7 @@ def run_incremental_upsert(
         clean = batch.dropDuplicates(keys)
         writers.upsert(spark, clean, target_path, keys)
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    _drain(stream.writeStream.foreachBatch(merge), checkpoint_dir, timeout_sec)
 
 
 def streaming_session_rollup(
@@ -147,15 +163,13 @@ def run_streaming_sessions(
     (append mode: each closed session is written exactly once)."""
     stream = read_events_stream(spark, landing_dir)
     rollup = streaming_session_rollup(stream, gap)
-    q = (
+    _drain(
         rollup.writeStream.format("parquet")
         .option("path", target_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def streaming_daily_counts(
@@ -199,15 +213,13 @@ def run_streaming_daily_counts(
     append to parquet exactly once per (day, event_type)."""
     stream = read_events_stream(spark, landing_dir)
     counts = streaming_daily_counts(stream, watermark)
-    q = (
+    _drain(
         counts.writeStream.format("parquet")
         .option("path", target_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 RUNNING_STATS_OUTPUT = StructType(
@@ -293,14 +305,12 @@ def run_running_user_stats(
     def sink(batch: DataFrame, _batch_id: int) -> None:
         writers.upsert(spark, batch, target_path, ["user_id"])
 
-    q = (
+    _drain(
         stats.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
+        checkpoint_dir,
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def run_streaming_scd2(
@@ -349,13 +359,7 @@ def run_streaming_scd2(
             hist = scd2_merge(hist, snap, keys, attrs, d)
         writers.full_refresh(hist, history_path)
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    _drain(stream.writeStream.foreachBatch(merge), checkpoint_dir, timeout_sec)
 
 
 def run_enriched_append(
@@ -392,10 +396,4 @@ def run_enriched_append(
         out = batch.join(F.broadcast(dim), on, "left")
         out.write.mode("append").parquet(target_path)
 
-    q = (
-        stream.writeStream.foreachBatch(enrich)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    _drain(stream.writeStream.foreachBatch(enrich), checkpoint_dir, timeout_sec)

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .incremental import read_events_stream
+from .incremental import _drain, read_events_stream
 
 
 def view_purchase_attribution(
@@ -92,12 +92,10 @@ def run_view_purchase_attribution(
     views = stream.filter(F.col("event_type") == "view")
     purchases = stream.filter(F.col("event_type") == "purchase")
     joined = view_purchase_attribution(views, purchases, window=window)
-    q = (
+    _drain(
         joined.writeStream.format("parquet")
         .option("path", target_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
 import datetime as dt
+import threading
+import time
+from dataclasses import dataclass, field
 
 import pytest
 from pyspark.sql import functions as F
@@ -91,22 +94,6 @@ class TestWarehousePipeline:
         results = pipe.run(ctx)
         assert [r.status for r in results] == ["failed", "success"]
         assert ctx.read("t.good").count() == 5
-
-    def test_failure_skips_when_not_continuing(self, ctx):
-        def boom(_ctx):
-            raise RuntimeError("synthetic failure")
-
-        pipe = Pipeline(
-            name="p",
-            groups=[
-                TaskGroup("g1", [Model("t.bad", boom)]),
-                TaskGroup("g2", [Model("t.never", lambda c: c.source("region"))]),
-            ],
-            retries=0,
-            continue_on_failure=False,
-        )
-        results = pipe.run(ctx)
-        assert [r.status for r in results] == ["failed", "skipped"]
 
     def test_promoted_models_hash_equal_their_registry_queries(self, ctx):
         """Every registry-promoted model's MATERIALIZED table must be
@@ -329,6 +316,96 @@ class TestWarehousePipeline:
         kpi = ctx.read("dwh.daily_kpi")
         assert kpi.filter(F.col("n_orders") < 0).count() == 0
         assert kpi.count() == kpi.select("date").distinct().count()
+
+
+@dataclass
+class _LoggedModel(Model):
+    """A model that records when it ran instead of building a table."""
+
+    log: dict = field(default_factory=dict)
+
+    def materialize(self, ctx: RunContext) -> None:
+        start = time.perf_counter()
+        time.sleep(0.3)
+        self.log[self.name] = (start, time.perf_counter())
+
+
+class TestScheduler:
+    """The one pipeline scheduler, at both pool widths, on a diamond of
+    TaskGroup.after edges: a -> {b, empty} -> c, plus d after the empty
+    group alone."""
+
+    GROUPS = {  # name: (models, after)
+        "a": (["a1", "a2"], []),
+        "b": (["b1"], ["a"]),
+        "empty": ([], ["a"]),
+        "c": (["c1", "c2"], ["b", "empty"]),
+        "d": (["d1"], ["empty"]),
+    }
+
+    def _upstream(self, group: str) -> set:
+        out = set()
+        for dep in self.GROUPS[group][1]:
+            out |= {dep} | self._upstream(dep)
+        return out
+
+    @pytest.mark.parametrize("parallel", [False, True])
+    def test_diamond_respects_edges(self, ctx, parallel):
+        log: dict = {}
+        pipe = Pipeline(
+            name="diamond",
+            groups=[
+                TaskGroup(
+                    g,
+                    [_LoggedModel(m, lambda c: None, log=log) for m in ms],
+                    after=after,
+                )
+                for g, (ms, after) in self.GROUPS.items()
+            ],
+            retries=0,
+            parallel_within_group=parallel,
+        )
+        box: dict = {}
+        runner = threading.Thread(
+            target=lambda: box.setdefault("results", pipe.run(ctx))
+        )
+        runner.start()
+        runner.join(timeout=60)
+        assert not runner.is_alive(), "scheduler stalled"
+
+        results = box["results"]
+        assert sorted(r.name for r in results) == sorted(log)
+        assert all(r.status == "success" for r in results)
+        assert len(log) == 6  # every model of every non-empty group ran
+        for g, (models, _after) in self.GROUPS.items():
+            upstream_end = max(
+                (log[m][1] for u in self._upstream(g)
+                 for m in self.GROUPS[u][0]),
+                default=0.0,
+            )
+            for m in models:
+                assert log[m][0] >= upstream_end, (m, g)
+        if parallel:
+            # d waits on the empty group only, so it overlaps b
+            assert log["d1"][0] < log["b1"][1]
+        else:
+            # one worker: one model at a time, results in run order
+            spans = [log[r.name] for r in results]
+            assert all(
+                end <= nxt for (_, end), (nxt, _) in zip(spans, spans[1:])
+            )
+
+    @pytest.mark.parametrize(
+        "groups",
+        [
+            [TaskGroup("x", [], after=["nope"])],
+            [TaskGroup("x", [], after=["y"]), TaskGroup("y", [])],
+        ],
+        ids=["unknown", "later"],
+    )
+    def test_bad_dependency_raises(self, ctx, groups):
+        with pytest.raises(ValueError, match="unknown/later dependency"):
+            Pipeline(name="bad", groups=groups).run(ctx)
 
 
 class TestQualityChecks:

@@ -445,3 +445,57 @@ class TestEnrichedStream:
         assert new_rows.filter(F.col("segment").isNull()).count() == 0
         # first drain's rows keep their v1-era enrichment (append-only)
         assert got2.filter(F.col("segment") == "v1").count() == n_even_users
+
+
+class TestDrainTimeout:
+    """A drain that overruns its timeout must stop its query and fail,
+    not return while the query keeps writing into the target."""
+
+    class _Query:
+        def __init__(self, finished: bool):
+            self.finished = finished
+            self.stopped = False
+            self.waited = None
+
+        def awaitTermination(self, timeout=None):
+            self.waited = timeout
+            return self.finished
+
+        def stop(self):
+            self.stopped = True
+
+    class _Writer:
+        def __init__(self, query):
+            self.query = query
+            self.options = {}
+            self.trigger_kw = None
+
+        def option(self, key, value):
+            self.options[key] = value
+            return self
+
+        def trigger(self, **kw):
+            self.trigger_kw = kw
+            return self
+
+        def start(self):
+            return self.query
+
+    def test_timeout_stops_query_and_raises(self):
+        from etl_pipelines_spark.streaming.incremental import _drain
+
+        q = self._Query(finished=False)
+        with pytest.raises(TimeoutError, match="ckpt"):
+            _drain(self._Writer(q), "ckpt", 7)
+        assert q.waited == 7
+        assert q.stopped
+
+    def test_finished_drain_returns_without_stop(self):
+        from etl_pipelines_spark.streaming.incremental import _drain
+
+        q = self._Query(finished=True)
+        w = self._Writer(q)
+        _drain(w, "ckpt", 7)
+        assert w.options == {"checkpointLocation": "ckpt"}
+        assert w.trigger_kw == {"availableNow": True}
+        assert not q.stopped

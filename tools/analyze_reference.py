@@ -827,41 +827,10 @@ _EXISTS_RE = re.compile(
 )
 
 
-_REPO_ROOT = pathlib.Path(__file__).resolve().parent.parent
-_BENCH_SENTINEL = _REPO_ROOT / "BENCH_RUNNING"
-
-
-def _bench_gate() -> None:
-    """Mechanical bench/sweep mutual exclusion (VERDICT r11 #2,
-    third contaminated bench): when the driver's bench writes the
-    BENCH_RUNNING sentinel, the sweep finishes its current
-    statement, writes a pause-ack, and sleeps until the sentinel
-    clears. bench.py refuses to measure while an analyzer is alive
-    without a fresh ack."""
-    if not _BENCH_SENTINEL.exists():
-        return
-    ack = pathlib.Path(str(_BENCH_SENTINEL) + ".ack")
-    try:
-        ack.write_text("paused")
-    except OSError:
-        pass
-    print(
-        json.dumps({"phase": "paused-for-bench"}),
-        file=sys.stderr, flush=True,
-    )
-    while _BENCH_SENTINEL.exists():
-        time.sleep(5)
-    try:
-        ack.unlink()
-    except OSError:
-        pass
-
-
 def _attempt(spark, head: str, sql: str):
     """Execute DDL-ish statements, analyze everything else. A CREATE
     whose target exists (files legitimately re-create shared tables)
     drops and retries so the NEW definition is the one validated."""
-    _bench_gate()
     if head in _EXEC_HEADS:
         if head == "DROP":
             sql = re.sub(

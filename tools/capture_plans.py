@@ -2,12 +2,13 @@
 
 Usage: python tools/capture_plans.py <outdir> <suffix> [query ...]
 Writes <outdir>/<query>_<suffix>.txt per query. With no query list,
-captures the bench HEADLINE set plus the heavy wh-pipeline model twins.
+captures the benchmark's ad-hoc query panel (perfbench/workloads.py)
+plus the heavy wh-pipeline model twins.
 
-The session mirrors bench.py conf (local[$SPARK_GRAFT_CPUS], small
-file splits) so the initial plan matches what the bench executes
-(AQE runtime re-optimization is additionally disclosed in
-OPTIMIZATION_r12.md where it matters).
+The session runs local[$SPARK_GRAFT_CPUS] with small file splits, so
+sf0.1 scans fan out the way they do on a multi-core box (AQE runtime
+re-optimization is additionally disclosed in OPTIMIZATION_r12.md where
+it matters).
 """
 from __future__ import annotations
 
@@ -23,7 +24,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from etl_pipelines_spark import session as _session
     from etl_pipelines_spark.queries import REGISTRY
-    import bench
+    from perfbench.workloads import panel
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
@@ -41,7 +42,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     names = sys.argv[3:] or (
-        bench.HEADLINE
+        panel()
         + ["spv_price_outliers", "mkt_affiliate_payout", "master_subscription",
            "top_products", "mon_table_stats"]
     )

@@ -1,6 +1,7 @@
 """Physical-plan audit: the scale-discipline feedback loop.
 
-For each headline query, capture the Catalyst FORMATTED plan and
+For each query of the benchmark's ad-hoc panel (perfbench/workloads.py)
+or each named query, capture the Catalyst FORMATTED plan and
 count the markers that matter at 100 TB:
 
 - Exchange            -> shuffles (each is a full network pass)
@@ -32,10 +33,10 @@ def main() -> None:
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     from etl_pipelines_spark.session import get_spark
     from etl_pipelines_spark.queries import REGISTRY
-    import bench
+    from perfbench.workloads import panel
 
     spark = get_spark()
-    names = args[1:] if len(args) > 1 else bench.HEADLINE
+    names = args[1:] if len(args) > 1 else panel()
     print(f"{'query':28s} {'exchanges':>9s} {'bhj':>4s} {'smj':>4s} "
           f"{'bnlj':>5s} {'pushed':>7s} {'python':>8s}")
     for name in names:

@@ -5,7 +5,7 @@ Default: /root/testdata/sf0.1 -> /root/repo/.scale/sf1 at 10x.
 
 Purpose (r3 VERDICT "Next round" #1): every 100 TB claim in PLANS.md
 is plan-shape-locked but measured at one scale point; this produces a
-10x point so bench.py can record the sf0.1 -> sf1 slope per query.
+10x point to record the sf0.1 -> sf1 slope per query against.
 The driver's generator isn't available, so we scale by replication
 with the statistics that MATTER for the measured queries held fixed:
 
